@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.operators.{AnnIndex, Similarity}
+import graft.pipeline.ParquetIO
 
 /** Measures the incremental arm of the materialized ANN index
   * ([[operators.AnnIndex]]) against the full build it replaces — the
@@ -35,96 +32,39 @@ object AppendSmoke {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
     val work = if (args.length > 2) args(2) else "/tmp/graft-append-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      // listener events drain asynchronously (listenerBus.waitUntilEmpty
-      // is private[spark]); a settle sleep is accurate enough for a
-      // MB-scale smoke comparison
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      Thread.sleep(2000)
-      (a, (System.nanoTime() - t0) / 1e9 - 2.0, bytesRead.get() - b0)
-    }
 
     val dir = s"$work/k$k"
     ScaleSmoke.buildScaled(spark, src, k, dir)
-    // an index for this corpus path may exist from a previous run —
-    // the build phase must measure a build, not a fast-path listing
-    deleteRecursively(operators.AnnIndex.indexPathFor(dir))
+    val build = smoke.build(AnnIndex, dir)
+    val codesDir = AnnIndex.tableDir(dir, "pq_codes")
+    val cbDir = AnnIndex.tableDir(dir, s"codebook_${AnnIndex.Salts.head}")
+    def state = (ParquetIO.read(spark, codesDir).count(), ParquetIO.currentVersion(cbDir))
+    val before = state
 
-    val (_, buildSec, buildBytes) = measured(operators.AnnIndex.ensure(spark, dir))
-    val codesDir = operators.AnnIndex.tableDir(dir, "pq_codes")
-    val cbDir = operators.AnnIndex.tableDir(dir, s"codebook_${operators.AnnIndex.Salts.head}")
-    val codesBefore = pipeline.ParquetIO.read(spark, codesDir).count()
-    val cbVerBefore = pipeline.ParquetIO.currentVersion(cbDir)
-
-    // land replica K as new files in the SAME source dir: write to a
-    // scratch dir, then move the data files in (unique part-file names;
-    // existing files' name:size:mtime untouched, so the old manifest is
-    // a strict subset of the new listing = the append trigger)
+    // land replica K as new files in the SAME source dir (existing
+    // files' name:size:mtime untouched, so the old manifest is a strict
+    // subset of the new listing = the append trigger)
     val me = Tables.load(spark, dir, "embeddings")
       .agg(max($"vec_id")).first().getLong(0) + 1L
-    val scratch = s"$work/delta-scratch"
-    val base = Tables.load(spark, src, "embeddings")
     val r = k % 64
     val rotated =
       if (r == 0) $"embedding"
       else concat(slice($"embedding", r + 1, 64 - r), slice($"embedding", 1, r))
     val permuted = if (k < 64) rotated else reverse(rotated)
-    base.select(($"vec_id" + lit(k * me)).as("vec_id"),
-        permuted.as("embedding"), $"label")
-      .write.mode("overwrite").parquet(scratch)
-    val target = Paths.get(dir, "embeddings.parquet")
-    val moved = Files.list(Paths.get(scratch)).iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .map(p => Files.move(p, target.resolve(p.getFileName.toString),
-        StandardCopyOption.ATOMIC_MOVE))
-    require(moved.nonEmpty, "delta write produced no data files")
+    Smoke.landDelta(Tables.load(spark, src, "embeddings")
+        .select(($"vec_id" + lit(k * me)).as("vec_id"), permuted.as("embedding"), $"label"),
+      s"$dir/embeddings.parquet", s"$work/delta-scratch")
 
-    val (_, appendSec, appendBytes) = measured(operators.AnnIndex.ensure(spark, dir))
-
-    val codesAfter = pipeline.ParquetIO.read(spark, codesDir).count()
-    val cbVerAfter = pipeline.ParquetIO.currentVersion(cbDir)
+    val append = smoke.ensure(AnnIndex, dir)
+    val after = state
     val deltaVecs = spark.read.parquet(s"$dir/embeddings.parquet")
       .filter($"vec_id" >= k * me).count()
-    val tookAppendArm = cbVerBefore == cbVerAfter &&
-      codesAfter - codesBefore == deltaVecs * operators.Similarity.PqSubspaces
-    System.err.println(
-      f"[append-smoke] build: $buildSec%.2f s / ${buildBytes / 1e6}%.1f MB read; " +
-        f"append: $appendSec%.2f s / ${appendBytes / 1e6}%.1f MB read; " +
-        s"appendArm=$tookAppendArm (codes $codesBefore -> $codesAfter, " +
-        s"codebook version $cbVerBefore -> $cbVerAfter)")
-    println(s"""{"k":$k,"src":"$src","build_sec":${f"$buildSec%.2f"},""" +
-      s""""append_sec":${f"$appendSec%.2f"},"build_bytes":$buildBytes,""" +
-      s""""append_bytes":$appendBytes,"append_arm":$tookAppendArm}""")
+    smoke.report("append-smoke", Some(k), src, build, Seq(append),
+      before._2 == after._2 && after._1 - before._1 == deltaVecs * Similarity.PqSubspaces,
+      s"codes ${before._1} -> ${after._1}, codebook version ${before._2} -> ${after._2}")
     spark.stop()
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -3,7 +3,6 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // trimmed-median-of-N per query: BENCH_r08 showed ambient machine load
     // can inflate single reps 8× (q140 ran [69.4, 15.7, 28.5] s on the
     // driver vs ~5.4 s isolated), and a plain median-of-3 passes one bad
@@ -12,41 +11,13 @@ object Bench {
     // median of the rest.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    val spark = Sessions.benchBuilder(cpus).getOrCreate()
-    // ERROR, not WARN: the driver parses the JSON line out of a bounded
-    // 2000-char stdout TAIL, and sbt relays the forked JVM's stderr into
-    // that same stream ("[error] ... WARN ResolveWriteToStream ...").
-    // BENCH_r04 was "parsed": null because the streaming queries' per-run
-    // WARN flood landed AFTER the JSON line in the tail window.
-    spark.sparkContext.setLogLevel("ERROR")
-    // warm the JVM/codegen/parquet-reader/shuffle paths once so the first
-    // timed query isn't charged for session initialization
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try graft.Tables.load(spark, sfDir, "customer")
-      .groupBy("c_mktsegment").count().count()
-    catch { case _: Throwable => () }
+    val spark = Sessions.get()
+    warm(spark, sfDir)
     // Per-query shuffle-byte accounting (round-6 stretch ask): totals and
     // the largest single-task shuffle read (the skew indicator) land in
     // bench_detail.json — turning the 100×-scale review from plan reading
-    // into numbers. Listener events are async; a short drain pause after
-    // each query's reps bounds cross-query smear to noise.
-    object ShuffleMeter extends org.apache.spark.scheduler.SparkListener {
-      val w = new java.util.concurrent.atomic.AtomicLong(0)
-      val r = new java.util.concurrent.atomic.AtomicLong(0)
-      val maxTaskR = new java.util.concurrent.atomic.AtomicLong(0)
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          w.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          val tr = m.shuffleReadMetrics.totalBytesRead
-          r.addAndGet(tr)
-          maxTaskR.getAndAccumulate(tr, math.max(_, _))
-        }
-      }
-      def reset(): Unit = { w.set(0); r.set(0); maxTaskR.set(0) }
-    }
-    spark.sparkContext.addSparkListener(ShuffleMeter)
+    // into numbers.
+    val meter = TaskMeter.attach(spark)
 
     // optional regex filter for iterating on individual queries
     val selected = args.headOption
@@ -54,7 +25,7 @@ object Bench {
       .getOrElse(Registry.all)
     val results: Seq[(String, Seq[Double], Int, (Long, Long, Long))] = selected.map { q =>
       var errors = 0
-      ShuffleMeter.reset()
+      meter.reset()
       val runs = (1 to reps).flatMap { _ =>
         // Cache isolation: queries persist() intermediates they reference
         // more than once; without clearing, q19's cached signatures would
@@ -84,14 +55,14 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_DEBUG"))
         System.err.println(s"[bench-debug] ${q.name} runs: " +
           runs.map(r => f"$r%.2f").mkString(", "))
-      Thread.sleep(150) // drain the async listener bus before reading
+      meter.settle()
       // divide by ATTEMPTS: failed runs' bytes are in the meter too, so
       // dividing by successes alone would inflate per-run shuffle for
       // exactly the queries that are breaking
       val per = math.max(runs.size + errors, 1)
       (q.name, runs, errors,
-        (ShuffleMeter.w.get() / per, ShuffleMeter.r.get() / per,
-          ShuffleMeter.maxTaskR.get()))
+        (meter.shuffleWrite.get() / per, meter.shuffleRead.get() / per,
+          meter.maxTaskShuffleRead.get()))
     }
     spark.catalog.clearCache()
     // all-runs-failed -> sentinel -1 so a breakage is unmistakable in the
@@ -223,5 +194,15 @@ object Bench {
     Thread.sleep(1500)
     println(line)
     System.out.flush()
+  }
+
+  /** Warms the JVM, codegen, parquet-reader and shuffle paths once so
+    * the first timed query isn't charged for session initialization.
+    */
+  def warm(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    try graft.Tables.load(spark, sfDir, "customer")
+      .groupBy("c_mktsegment").count().count()
+    catch { case _: Throwable => () }
   }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the O(delta) selection arm (q292's production cadence)
@@ -31,31 +27,9 @@ object DeltaSelectSmoke {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft-delta-select"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(2000)
-      (a, sec, bytesRead.get() - b0)
-    }
 
     import graft.operators.Similarity._
     val S = graft.operators.Similarity
@@ -73,7 +47,7 @@ object DeltaSelectSmoke {
       .localCheckpoint()
 
     // phase 1: full recompute over the union
-    val (fullVerdicts, fullSec, fullBytes) = measured {
+    val (fullVerdicts, semFull) = smoke.measured {
       val baseA = S.semdedupAssign(spark, base, cb).persist()
       val deltaA = S.semdedupAssign(spark, delta, cb).persist()
       val unionA = baseA.unionByName(deltaA)
@@ -95,7 +69,7 @@ object DeltaSelectSmoke {
 
     // phase 3: the delta arm — delta routing + the two delta-touching
     // vote terms + stored verdicts; no corpus-wide pair work
-    val (deltaVerdicts, deltaSec, deltaBytes) = measured {
+    val (deltaVerdicts, semDelta) = smoke.measured {
       val dA = S.semdedupAssign(spark, delta, cb).persist()
       val bA = spark.read.parquet(s"$work/base_assign.parquet")
       val storedRemoved = spark.read.parquet(s"$work/base_removed.parquet")
@@ -126,14 +100,14 @@ object DeltaSelectSmoke {
     val dbBase = T.dsirDocBuckets(docs.filter($"doc_id" % 10 =!= 7))
       .localCheckpoint()
     val lrFrozen = T.dsirModel(dbBase).localCheckpoint()
-    val (fullKeep, dFullSec, dFullBytes) = measured {
+    val (fullKeep, dsirFull) = smoke.measured {
       T.dsirKeepCut(spark, T.dsirScore(T.dsirDocBuckets(docs), lrFrozen))
         .select($"doc_id", $"keep").as[(Long, Boolean)].collect().toMap
     }
     T.dsirScore(dbBase, lrFrozen)
       .write.mode("overwrite").parquet(s"$work/base_scores.parquet")
     spark.catalog.clearCache()
-    val (deltaKeep, dDeltaSec, dDeltaBytes) = measured {
+    val (deltaKeep, dsirDelta) = smoke.measured {
       val union = spark.read.parquet(s"$work/base_scores.parquet")
         .unionByName(T.dsirScore(
           T.dsirDocBuckets(docs.filter($"doc_id" % 10 === 7)), lrFrozen))
@@ -151,11 +125,11 @@ object DeltaSelectSmoke {
     // (documents are KBs, a score row is ~40 B) the bytes ratio
     // follows the same direction.
 
-    println(f"""{"semdedup":{"full_sec":$fullSec%.2f,"full_bytes":$fullBytes,""" +
-      f""""delta_sec":$deltaSec%.2f,"delta_bytes":$deltaBytes,""" +
+    println(f"""{"semdedup":{"full_sec":${semFull.sec}%.2f,"full_bytes":${semFull.bytes},""" +
+      f""""delta_sec":${semDelta.sec}%.2f,"delta_bytes":${semDelta.bytes},""" +
       f""""n_vectors":${fullVerdicts.size},"n_delta":$nDelta,"equal":true},""" +
-      f""""dsir":{"full_sec":$dFullSec%.2f,"full_bytes":$dFullBytes,""" +
-      f""""delta_sec":$dDeltaSec%.2f,"delta_bytes":$dDeltaBytes,""" +
+      f""""dsir":{"full_sec":${dsirFull.sec}%.2f,"full_bytes":${dsirFull.bytes},""" +
+      f""""delta_sec":${dsirDelta.sec}%.2f,"delta_bytes":${dsirDelta.bytes},""" +
       f""""n_docs":${fullKeep.size},"equal":true}}""")
     spark.stop()
   }

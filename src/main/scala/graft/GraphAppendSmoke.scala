@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.operators.GraphIndex
+import graft.pipeline.ParquetIO
 
 /** Measures the incremental arm of the materialized graph index
   * ([[operators.GraphIndex]]) against the full build it replaces — the
@@ -34,30 +32,9 @@ object GraphAppendSmoke {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 4
     val work = if (args.length > 2) args(2) else "/tmp/graft-graph-append-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      Thread.sleep(2000)
-      (a, (System.nanoTime() - t0) / 1e9 - 2.0, bytesRead.get() - b0)
-    }
 
     // key-offset replica i of the two graph sources (the ScaleSmoke
     // formulas, restricted to the columns the index reads)
@@ -76,59 +53,23 @@ object GraphAppendSmoke {
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     (0 until k).map(lineitemRep).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    deleteRecursively(operators.GraphIndex.indexPathFor(dir))
 
-    val (_, buildSec, buildBytes) = measured(operators.GraphIndex.ensure(spark, dir))
-    val edgesT = operators.GraphIndex.tableDir(dir, "edges")
-    val vBefore = pipeline.ParquetIO.currentVersion(edgesT).get
-    val edgesBefore = pipeline.ParquetIO.read(spark, edgesT).count()
+    val build = smoke.build(GraphIndex, dir)
+    val edgesT = GraphIndex.tableDir(dir, "edges")
+    val vBefore = ParquetIO.currentVersion(edgesT).get
+    val edgesBefore = ParquetIO.read(spark, edgesT).count()
 
     // land replica K as new part files in the SAME source dirs
-    landDelta(spark, ordersRep(k), s"$dir/orders.parquet", s"$work/scratch-o")
-    landDelta(spark, lineitemRep(k), s"$dir/lineitem.parquet", s"$work/scratch-l")
+    Smoke.landDelta(ordersRep(k), s"$dir/orders.parquet", s"$work/scratch-o")
+    Smoke.landDelta(lineitemRep(k), s"$dir/lineitem.parquet", s"$work/scratch-l")
 
-    val (_, appendSec, appendBytes) = measured(operators.GraphIndex.ensure(spark, dir))
-
-    val vAfter = pipeline.ParquetIO.currentVersion(edgesT).get
-    val edgesAfter = pipeline.ParquetIO.read(spark, edgesT).count()
-    val vp = Paths.get(pipeline.ParquetIO.versionPath(edgesT, vAfter))
-    val st = Files.list(vp)
-    val hasPrev = try st.iterator().asScala.exists(_.getFileName.toString.startsWith(s"prev${vBefore}_"))
-      finally st.close()
+    val append = smoke.ensure(GraphIndex, dir)
+    val edgesAfter = ParquetIO.read(spark, edgesT).count()
     // replica K's edge set is key-disjoint from the base, so it must add
     // exactly edgesBefore / k rows
-    val tookAppendArm = vAfter == vBefore + 1 && hasPrev &&
-      edgesAfter - edgesBefore == edgesBefore / k
-    System.err.println(
-      f"[graph-append-smoke] build: $buildSec%.2f s / ${buildBytes / 1e6}%.1f MB read; " +
-        f"append: $appendSec%.2f s / ${appendBytes / 1e6}%.1f MB read; " +
-        s"appendArm=$tookAppendArm (edges $edgesBefore -> $edgesAfter, " +
-        s"version $vBefore -> $vAfter)")
-    println(s"""{"k":$k,"src":"$src","build_sec":${f"$buildSec%.2f"},""" +
-      s""""append_sec":${f"$appendSec%.2f"},"build_bytes":$buildBytes,""" +
-      s""""append_bytes":$appendBytes,"append_arm":$tookAppendArm}""")
+    smoke.report("graph-append-smoke", Some(k), src, build, Seq(append),
+      Smoke.appendedVersion(edgesT, vBefore) && edgesAfter - edgesBefore == edgesBefore / k,
+      s"edges $edgesBefore -> $edgesAfter, version $vBefore -> ${ParquetIO.currentVersion(edgesT).get}")
     spark.stop()
   }
-
-  private def landDelta(spark: SparkSession, df: DataFrame, target: String, scratch: String): Unit = {
-    df.write.mode("overwrite").parquet(scratch)
-    val tp = Paths.get(target)
-    val st = Files.list(Paths.get(scratch))
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, tp.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

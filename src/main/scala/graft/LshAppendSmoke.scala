@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.operators.LshIndex
+import graft.pipeline.ParquetIO
 
 /** Measures the incremental arm of the materialized LSH band index
   * ([[operators.LshIndex]]) against the full build it replaces — the
@@ -24,30 +22,9 @@ object LshAppendSmoke {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
     val work = if (args.length > 2) args(2) else "/tmp/graft-lsh-append-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      Thread.sleep(2000)
-      (a, (System.nanoTime() - t0) / 1e9 - 2.0, bytesRead.get() - b0)
-    }
 
     val base = Tables.load(spark, src, "documents").select($"doc_id", $"text")
     val md = base.agg(max($"doc_id")).first().getLong(0) + 1L
@@ -57,56 +34,20 @@ object LshAppendSmoke {
     val dir = s"$work/k$k"
     (0 until k).map(rep).reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    deleteRecursively(operators.LshIndex.indexPathFor(dir))
 
-    val (_, buildSec, buildBytes) = measured(operators.LshIndex.ensure(spark, dir))
-    val bandsT = operators.LshIndex.tableDir(dir, "bands")
-    val vBefore = pipeline.ParquetIO.currentVersion(bandsT).get
-    val bandsBefore = pipeline.ParquetIO.read(spark, bandsT).count()
+    val build = smoke.build(LshIndex, dir)
+    val bandsT = LshIndex.tableDir(dir, "bands")
+    val vBefore = ParquetIO.currentVersion(bandsT).get
+    val bandsBefore = ParquetIO.read(spark, bandsT).count()
 
-    landDelta(rep(k), s"$dir/documents.parquet", s"$work/scratch")
+    Smoke.landDelta(rep(k), s"$dir/documents.parquet", s"$work/scratch")
 
-    val (_, appendSec, appendBytes) = measured(operators.LshIndex.ensure(spark, dir))
-
-    val vAfter = pipeline.ParquetIO.currentVersion(bandsT).get
-    val bandsAfter = pipeline.ParquetIO.read(spark, bandsT).count()
-    val vp = Paths.get(pipeline.ParquetIO.versionPath(bandsT, vAfter))
-    val st = Files.list(vp)
-    val hasPrev = try st.iterator().asScala.exists(_.getFileName.toString.startsWith(s"prev${vBefore}_"))
-      finally st.close()
+    val append = smoke.ensure(LshIndex, dir)
+    val bandsAfter = ParquetIO.read(spark, bandsT).count()
     // replica K signs to exactly 1/K of the base's band rows
-    val tookAppendArm = vAfter == vBefore + 1 && hasPrev &&
-      bandsAfter - bandsBefore == bandsBefore / k
-    System.err.println(
-      f"[lsh-append-smoke] build: $buildSec%.2f s / ${buildBytes / 1e6}%.1f MB read; " +
-        f"append: $appendSec%.2f s / ${appendBytes / 1e6}%.1f MB read; " +
-        s"appendArm=$tookAppendArm (bands $bandsBefore -> $bandsAfter, " +
-        s"version $vBefore -> $vAfter)")
-    println(s"""{"k":$k,"src":"$src","build_sec":${f"$buildSec%.2f"},""" +
-      s""""append_sec":${f"$appendSec%.2f"},"build_bytes":$buildBytes,""" +
-      s""""append_bytes":$appendBytes,"append_arm":$tookAppendArm}""")
+    smoke.report("lsh-append-smoke", Some(k), src, build, Seq(append),
+      Smoke.appendedVersion(bandsT, vBefore) && bandsAfter - bandsBefore == bandsBefore / k,
+      s"bands $bandsBefore -> $bandsAfter, version $vBefore -> ${ParquetIO.currentVersion(bandsT).get}")
     spark.stop()
   }
-
-  private def landDelta(df: DataFrame, target: String, scratch: String): Unit = {
-    df.write.mode("overwrite").parquet(scratch)
-    val tp = Paths.get(target)
-    val st = Files.list(Paths.get(scratch))
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, tp.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.Paths
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the round-9 optimistic-concurrency layer
@@ -31,22 +30,9 @@ object OccSmoke {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = if (args.length > 1) args(1).toInt else 10
     val work = if (args.length > 2) args(2) else "/tmp/graft-occ-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect() // JIT warmup
-
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
 
     def checksum(dir: String): Long =
       pipeline.ParquetIO.read(spark, dir)
@@ -55,18 +41,20 @@ object OccSmoke {
           .cast("long")))
         .first().getLong(0)
 
+    // reps key-offset replicas of the documents table
+    val docs = Tables.load(spark, src, "documents")
+    val nDocs = docs.count()
+    def scaledDocs(reps: Int) = (0 until reps).map { r =>
+      docs.select(($"doc_id" + lit(r * nDocs)).as("doc_id"), $"text",
+        $"lang", $"source", $"n_chars")
+    }.reduce(_ unionByName _)
+
     // ---- 1. compaction at two scales --------------------------------
     def compactRun(reps: Int): (Double, pipeline.ParquetIO.CompactionStats) = {
       val dir = s"$work/compact-x$reps/docs"
-      val base = Tables.load(spark, src, "documents")
-      val n = base.count()
-      val scaled = (0 until reps).map { r =>
-        base.select(($"doc_id" + lit(r * n)).as("doc_id"), $"text",
-          $"lang", $"source", $"n_chars")
-      }.reduce(_ unionByName _)
-      pipeline.ParquetIO.overwriteConcurrent(scaled.repartition(64), dir)
+      pipeline.ParquetIO.overwriteConcurrent(scaledDocs(reps).repartition(64), dir)
       val before = checksum(dir)
-      val (stats, sec) = timed(
+      val (stats, Smoke.Phase(sec, _)) = smoke.measured(
         pipeline.ParquetIO.compact(spark, dir, targetBytes = 4L << 20))
       require(checksum(dir) == before, s"compact x$reps changed content!")
       (sec, stats)
@@ -78,15 +66,9 @@ object OccSmoke {
     // sort for read-time data skipping — measure the premium over the
     // narrow coalesce rewrite
     val clDir = s"$work/compact-cl/docs"
-    pipeline.ParquetIO.overwriteConcurrent(
-      (0 until k).map { r =>
-        val base = Tables.load(spark, src, "documents")
-        val n0 = base.count()
-        base.select(($"doc_id" + lit(r * n0)).as("doc_id"), $"text",
-          $"lang", $"source", $"n_chars")
-      }.reduce(_ unionByName _).repartition(64, $"text"), clDir)
+    pipeline.ParquetIO.overwriteConcurrent(scaledDocs(k).repartition(64, $"text"), clDir)
     val beforeCl = checksum(clDir)
-    val (stCl, secCl) = timed(pipeline.ParquetIO.compact(
+    val (stCl, Smoke.Phase(secCl, _)) = smoke.measured(pipeline.ParquetIO.compact(
       spark, clDir, targetBytes = 4L << 20, clusterBy = Seq("doc_id")))
     require(checksum(clDir) == beforeCl, "clustered compact changed content!")
 
@@ -94,31 +76,15 @@ object OccSmoke {
     // same range predicate against the coalesce-compacted vs clustered
     // K-scale tables: clustered files own disjoint doc_id ranges, so
     // parquet row-group stats should kill most of the scan
-    val skipBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          skipBytes.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def readBytes(f: => Long): (Long, Long) = {
-      val b0 = skipBytes.get(); val n = f
-      Thread.sleep(200) // listener events drain async
-      (n, skipBytes.get() - b0)
-    }
     // two 12-file layouts of the same K-scale table: hash-scattered
     // (every file spans the full doc_id domain) vs range-clustered
     // (disjoint per-file ranges); a 5%-selectivity range predicate
     // should read ~1/12 of the clustered bytes and ALL scattered bytes
     val skipPlain = s"$work/skip-plain/docs"
     val skipCl = s"$work/skip-cl/docs"
-    val kBase0 = (0 until k).map { r =>
-      val b = Tables.load(spark, src, "documents")
-      val n0 = b.count()
-      b.select(($"doc_id" + lit(r * n0)).as("doc_id"), $"text",
-        $"lang", $"source", $"n_chars")
-    }.reduce(_ unionByName _)
-    pipeline.ParquetIO.overwriteConcurrent(kBase0.repartition(12), skipPlain)
-    pipeline.ParquetIO.overwriteConcurrent(kBase0.repartition(12), skipCl)
+    val kBase = scaledDocs(k)
+    pipeline.ParquetIO.overwriteConcurrent(kBase.repartition(12), skipPlain)
+    pipeline.ParquetIO.overwriteConcurrent(kBase.repartition(12), skipCl)
     pipeline.ParquetIO.compact(spark, skipCl,
       targetBytes = math.max(64L << 10, pipeline.ParquetIO.tableBytes(skipCl) / 12),
       clusterBy = Seq("doc_id"))
@@ -130,8 +96,8 @@ object OccSmoke {
     def rangeScan(dir: String): Long = pipeline.ParquetIO.read(spark, dir)
       .filter($"doc_id" < rangeHi)
       .agg(sum(length($"text"))).first().getLong(0)
-    val (nPlainSel, plainBytes) = readBytes(rangeScan(skipPlain))
-    val (nClSel, clBytes) = readBytes(rangeScan(skipCl))
+    val (nPlainSel, Smoke.Phase(_, plainBytes)) = smoke.measured(rangeScan(skipPlain))
+    val (nClSel, Smoke.Phase(_, clBytes)) = smoke.measured(rangeScan(skipCl))
     require(nPlainSel == nClSel, "skipping changed the answer!")
 
     // ---- 2. OCC contention ------------------------------------------
@@ -139,13 +105,13 @@ object OccSmoke {
     val commits = 3
     val occDir = s"$work/occ/table"
     // single-writer baseline: one commit of the same shape, uncontended
-    val (_, soloSec) = timed {
+    val (_, Smoke.Phase(soloSec, _)) = smoke.measured {
       pipeline.ParquetIO.transformConcurrent(spark, s"$work/occ/solo") {
         case _ => Seq.tabulate(1000)(i => (i, "seed")).toDF("k", "src")
       }
     }
     val err = new AtomicReference[Throwable]()
-    val (_, occSec) = timed {
+    val (_, Smoke.Phase(occSec, _)) = smoke.measured {
       val ts = (0 until writers).map { w =>
         new Thread(() => try {
           (0 until commits).foreach { c =>
@@ -173,12 +139,6 @@ object OccSmoke {
     def tableBytes(dir: String): Long = pipeline.ParquetIO.tableBytes(dir)
     val morDir = s"$work/mor/docs"
     val cowDir = s"$work/cow/docs"
-    val kBase = (0 until k).map { r =>
-      val b = Tables.load(spark, src, "documents")
-      val n0 = b.count()
-      b.select(($"doc_id" + lit(r * n0)).as("doc_id"), $"text",
-        $"lang", $"source", $"n_chars")
-    }.reduce(_ unionByName _)
     pipeline.ParquetIO.overwriteConcurrent(kBase.repartition(16), morDir)
     pipeline.ParquetIO.overwriteConcurrent(kBase.repartition(16), cowDir)
     // batch derives from the IMMUTABLE source, not the target table: a
@@ -190,10 +150,10 @@ object OccSmoke {
       .withColumn("text", concat($"text", lit(" [rev2]"))).persist()
     batch.count()
     val bytesBeforeMor = tableBytes(morDir)
-    val (_, morSec) = timed(
+    val (_, Smoke.Phase(morSec, _)) = smoke.measured(
       pipeline.ParquetIO.upsertMoR(spark, morDir, batch, Seq("doc_id")))
     val morWritten = tableBytes(morDir) - bytesBeforeMor
-    val (_, cowSec) = timed {
+    val (_, Smoke.Phase(cowSec, _)) = smoke.measured {
       pipeline.ParquetIO.transformConcurrent(spark, cowDir) {
         case Some(base) =>
           base.join(batch.select($"doc_id"), Seq("doc_id"), "left_anti")
@@ -232,13 +192,6 @@ object OccSmoke {
       s""""range_read_plain_bytes":$plainBytes,"range_read_clustered_bytes":$clBytes}""")
     spark.stop()
     // scratch tables are at $work; safe to delete between runs
-    rm(work)
-  }
-
-  private def rm(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
+    graft.pipeline.ParquetIO.deleteTree(Paths.get(work))
   }
 }

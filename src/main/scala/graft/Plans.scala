@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of each (or one)
   * registered query so scan pruning (ReadSchema), predicate pushdown
   * (PushedFilters), join strategies (BroadcastHashJoin vs SortMerge) and
@@ -13,13 +11,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val pattern = args.headOption.getOrElse(".*")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.get()
     Registry.all.filter(_.name.matches(pattern)).foreach { q =>
       println(s"\n========== ${q.name} (${q.surveyOps.mkString(",")}) ==========")
       try q.fn(spark, sfDir).explain("formatted")

@@ -1,9 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import scala.collection.mutable
-
 /** Per-stage time-accounting profiler for single queries — answers WHERE
   * a query's wall-clock goes (task compute vs GC vs scheduler/launch
   * overhead vs shuffle fetch), which `explain` and the bench's
@@ -23,57 +19,9 @@ object Profile {
     val pattern = args.headOption.getOrElse(".*")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.benchBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    try graft.Tables.load(spark, sfDir, "customer")
-      .groupBy("c_mktsegment").count().count()
-    catch { case _: Throwable => () }
-
-    final case class StageAgg(
-        var name: String = "",
-        var numTasks: Int = 0,
-        var runMs: Long = 0, var gcMs: Long = 0,
-        var serMs: Long = 0, var fetchMs: Long = 0,
-        var cpuNs: Long = 0,
-        var schedMs: Long = 0, // launch->finish minus everything metered
-        var submitted: Long = 0, var completed: Long = 0)
-
-    object L extends SparkListener {
-      val stages = mutable.LinkedHashMap[Int, StageAgg]()
-      var jobs = 0
-      var tasks = 0
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        val a = stages.getOrElseUpdate(s.stageInfo.stageId, StageAgg())
-        a.name = s.stageInfo.name.takeWhile(_ != '\n').take(90)
-        a.submitted = System.currentTimeMillis()
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val a = stages.getOrElseUpdate(s.stageInfo.stageId, StageAgg())
-        a.completed = System.currentTimeMillis()
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val a = stages.getOrElseUpdate(t.stageId, StageAgg())
-        tasks += 1
-        a.numTasks += 1
-        val m = t.taskMetrics
-        if (m != null) {
-          a.runMs += m.executorRunTime
-          a.gcMs += m.jvmGCTime
-          a.cpuNs += m.executorCpuTime
-          a.serMs += m.executorDeserializeTime + m.resultSerializationTime
-          a.fetchMs += m.shuffleReadMetrics.fetchWaitTime
-          val wall = t.taskInfo.finishTime - t.taskInfo.launchTime
-          a.schedMs += math.max(0,
-            wall - m.executorRunTime - m.executorDeserializeTime -
-              m.resultSerializationTime)
-        }
-      }
-      def reset(): Unit = { stages.clear(); jobs = 0; tasks = 0 }
-    }
-    spark.sparkContext.addSparkListener(L)
+    val spark = Sessions.get()
+    Bench.warm(spark, sfDir)
+    val meter = TaskMeter.attach(spark)
 
     Registry.all.filter(_.name.matches(pattern)).foreach { q =>
       // warmup rep (codegen compile, shuffle files)
@@ -85,28 +33,28 @@ object Profile {
         spark.catalog.clearCache()
         System.gc()
         Thread.sleep(200)
-        L.reset()
+        meter.settle()
+        meter.reset()
         val t0 = System.nanoTime()
         q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
-      Thread.sleep(300) // drain listener
-      val st = L.stages.values.toSeq
+      meter.settle()
+      val st = meter.stages
       println(f"\n===== ${q.name} wall=${wall.min}%.2f..${wall.max}%.2f s " +
-        f"(last rep: jobs=${L.jobs} stages=${st.size} tasks=${L.tasks})")
+        f"(last rep: jobs=${meter.jobs.get} stages=${st.size} tasks=${meter.tasks.get})")
       val totalRun = st.map(_.runMs).sum
       val totalGc = st.map(_.gcMs).sum
       val totalCpu = st.map(_.cpuNs).sum / 1e6
       val totalSched = st.map(_.schedMs).sum
       val totalSer = st.map(_.serMs).sum
       val totalFetch = st.map(_.fetchMs).sum
-      val spanSum = st.map(s => math.max(0, s.completed - s.submitted)).sum
+      val spanSum = st.map(_.spanMs).sum
       println(f"  sums: run=${totalRun}ms cpu=${totalCpu}%.0fms gc=${totalGc}ms " +
         f"serde=${totalSer}ms fetch=${totalFetch}ms sched=${totalSched}ms " +
         f"stageSpanSum=${spanSum}ms")
-      st.sortBy(s => -(s.completed - s.submitted)).take(14).foreach { s =>
-        val span = s.completed - s.submitted
-        println(f"  span=${span}%5dms tasks=${s.numTasks}%3d run=${s.runMs}%5dms " +
+      st.sortBy(-_.spanMs).take(14).foreach { s =>
+        println(f"  span=${s.spanMs}%5dms tasks=${s.tasks}%3d run=${s.runMs}%5dms " +
           f"cpu=${s.cpuNs / 1e6}%6.0fms gc=${s.gcMs}%4dms sched=${s.schedMs}%5dms ${s.name}")
       }
     }

@@ -38,16 +38,7 @@ object ScaleSmoke {
     val k = if (args.length > 1) args(1).toInt else 10
     val work = if (args.length > 2) args(2) else "/tmp/graft-scale"
     val pat = if (args.length > 3) args(3) else ".*"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    val spark = Smoke().spark
 
     val dir = s"$work/k$k"
     buildScaled(spark, src, k, dir)
@@ -336,11 +327,7 @@ object ScaleSmoke {
       case (name, fn) =>
         spark.catalog.clearCache()
         System.gc()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[scale-smoke] $name: $sec%.2f s (k=$k)")
-        name -> sec
+        timed(name)(fn(spark, dir).write.format("noop").mode("overwrite").save())
     } ++ builds
     val json = times.map { case (n, s) => s""""$n":${math.round(s * 100) / 100.0}""" }
       .mkString("{", ",", "}")

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The measured session configuration the bench/profile harnesses share
+/** The measured session configuration every entry point shares
   * (round 15, optimization-guide §1 "measure first" → §2.2 partition
   * sizing → §6 I/O). Every entry here was A/B-measured on the 7-query
   * working set (q137/q215/q314/q322/q133/q293/q231, sf0.1, local[32],
@@ -46,6 +46,25 @@ import org.apache.spark.sql.SparkSession
   * suite 36.1 → 30.6 s, measured GC time in task metrics drops ~3×.)
   */
 object Sessions {
+  /** The one session every entry point and the test suites run on:
+    * [[benchBuilder]] sized by [[cpus]], so what Bench times is what
+    * Verify and the tests check. Logs at ERROR, not WARN: Bench's JSON
+    * line is parsed out of a bounded 2000-char stdout tail, and sbt
+    * relays the forked JVM's stderr into that same stream
+    * (BENCH_r04 was "parsed": null because the streaming queries' WARN
+    * flood landed after the line). The test run would otherwise also
+    * write hundreds of thousands of INFO lines.
+    */
+  def get(): SparkSession = {
+    val spark = benchBuilder(cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
+  }
+
+  /** Task slots: `SPARK_GRAFT_CPUS`, else the JVM's available processors. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
   def benchBuilder(cpus: String): SparkSession.Builder = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

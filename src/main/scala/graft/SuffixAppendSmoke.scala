@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.operators.{Dedup, SuffixIndex}
+import graft.pipeline.ParquetIO
 
 /** Measures the incremental arm of the materialized suffix permutation
   * ([[operators.SuffixIndex]]) against the full doubling build it
@@ -26,102 +25,44 @@ object SuffixAppendSmoke {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft-suffix-append-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      Thread.sleep(2000)
-      (a, (System.nanoTime() - t0) / 1e9 - 2.0, bytesRead.get() - b0)
-    }
 
     val base = Tables.load(spark, src, "documents").select($"doc_id", $"text")
     val dir = s"$work/corpus"
-    deleteRecursively(Paths.get(dir))
+    ParquetIO.deleteTree(Paths.get(dir))
     base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    deleteRecursively(operators.SuffixIndex.indexPathFor(dir))
 
-    val (_, buildSec, buildBytes) = measured(operators.SuffixIndex.ensure(spark, dir))
-    val rT = operators.SuffixIndex.tableDir(dir, "ranks")
-    val nBefore = pipeline.ParquetIO.read(spark, rT).count()
+    val build = smoke.build(SuffixIndex, dir)
+    val rT = SuffixIndex.tableDir(dir, "ranks")
+    val nBefore = ParquetIO.read(spark, rT).count()
+    def arm = Files.readString(SuffixIndex.indexPathFor(dir).resolve("_last_arm")).trim
 
     // the re-crawl batch: every 10th POOL doc re-ingested under a new
     // id that stays in the pool (doc_id % SufMod == 0 preserved)
-    landDelta(
-      base.filter($"doc_id" % (operators.Dedup.SufMod * 10) === 0)
-        .select(($"doc_id" + lit(operators.Dedup.TwinOffset) * 10).as("doc_id"),
-          $"text"),
+    Smoke.landDelta(
+      base.filter($"doc_id" % (Dedup.SufMod * 10) === 0)
+        .select(($"doc_id" + lit(Dedup.TwinOffset) * 10).as("doc_id"), $"text"),
       s"$dir/documents.parquet", s"$work/scratch")
-
-    val (_, appendSec, appendBytes) = measured(operators.SuffixIndex.ensure(spark, dir))
-    val nAfter = pipeline.ParquetIO.read(spark, rT).count()
-    val arm = Files.readString(
-      operators.SuffixIndex.indexPathFor(dir).resolve("_last_arm")).trim
+    val append = smoke.ensure(SuffixIndex, dir)
+    val nAfter = ParquetIO.read(spark, rT).count()
+    val arm1 = arm
 
     // second batch — the q327 streaming cadence: per-batch bytes must
     // stay O(base + delta) (one history window scan each), not grow
     // with how many batches came before
-    landDelta(
-      base.filter($"doc_id" % (operators.Dedup.SufMod * 10) ===
-          operators.Dedup.SufMod * 3)
-        .select(($"doc_id" + lit(operators.Dedup.TwinOffset) * 30).as("doc_id"),
-          $"text"),
+    Smoke.landDelta(
+      base.filter($"doc_id" % (Dedup.SufMod * 10) === Dedup.SufMod * 3)
+        .select(($"doc_id" + lit(Dedup.TwinOffset) * 30).as("doc_id"), $"text"),
       s"$dir/documents.parquet", s"$work/scratch")
-    val (_, append2Sec, append2Bytes) =
-      measured(operators.SuffixIndex.ensure(spark, dir))
-    val arm2 = Files.readString(
-      operators.SuffixIndex.indexPathFor(dir).resolve("_last_arm")).trim
+    val append2 = smoke.ensure(SuffixIndex, dir)
+    val arm2 = arm
 
-    System.err.println(
-      f"[suffix-append-smoke] build: $buildSec%.2f s / ${buildBytes / 1e6}%.1f MB read; " +
-        f"append: $appendSec%.2f s / ${appendBytes / 1e6}%.1f MB read; " +
-        f"append2: $append2Sec%.2f s / ${append2Bytes / 1e6}%.1f MB read; " +
-        s"arm=$arm/$arm2 (ranks $nBefore -> $nAfter) " +
-        s"kernelRows=${operators.SuffixIndex.lastMergeKernelRows} " +
-        s"rounds=${operators.SuffixIndex.lastMergeRounds}")
-    println(s"""{"src":"$src","build_sec":${f"$buildSec%.2f"},""" +
-      s""""append_sec":${f"$appendSec%.2f"},"build_bytes":$buildBytes,""" +
-      s""""append_bytes":$appendBytes,""" +
-      s""""append2_sec":${f"$append2Sec%.2f"},"append2_bytes":$append2Bytes,""" +
-      s""""append_arm":${arm == "merge" && arm2 == "merge"}}""")
+    smoke.report("suffix-append-smoke", None, src, build, Seq(append, append2),
+      arm1 == "merge" && arm2 == "merge",
+      s"arm=$arm1/$arm2, ranks $nBefore -> $nAfter, " +
+        s"kernelRows=${SuffixIndex.lastMergeKernelRows} rounds=${SuffixIndex.lastMergeRounds}")
     spark.stop()
   }
-
-  private def landDelta(df: DataFrame, target: String, scratch: String): Unit = {
-    df.write.mode("overwrite").parquet(scratch)
-    val tp = Paths.get(target)
-    val st = Files.list(Paths.get(scratch))
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, tp.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.pipeline.ParquetIO.deleteTree
 
 /** Measures the [[operators.SuffixIndex]] merge arm's collision
   * BOUNDING on the adversarial corpus class the r13 verdict named: one
@@ -27,16 +28,9 @@ object SuffixSkewSmoke {
 
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft-suffix-skew-smoke")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
 
     val boiler =
       ("all rights reserved redistribution and use in source and binary forms " +
@@ -44,13 +38,12 @@ object SuffixSkewSmoke {
     val levels = Seq(250, 500, 1000)
     val recs = levels.map { k =>
       val dir = s"$work/k$k"
-      deleteRecursively(Paths.get(dir))
+      deleteTree(Paths.get(dir))
       val base = spark.range(1, k + 1)
         .select(($"id" * 10).as("doc_id"),
           concat(lit(s"$boiler tail "), $"id".cast("string")).as("text"))
       base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      deleteRecursively(operators.SuffixIndex.indexPathFor(dir))
-      operators.SuffixIndex.ensure(spark, dir)
+      smoke.build(operators.SuffixIndex, dir)
 
       val delta = spark.range(1, k / 10 + 1)
         .select((lit(1000000L) + $"id" * 10).as("doc_id"),
@@ -65,10 +58,8 @@ object SuffixSkewSmoke {
         .join(w(delta).groupBy($"g").agg(count(lit(1)).as("cd")), Seq("g"))
         .select(sum($"cd" * ($"cb" + $"cd" - 1))).head().getLong(0)
 
-      landDelta(delta, s"$dir/documents.parquet", s"$work/scratch")
-      val t0 = System.nanoTime()
-      operators.SuffixIndex.ensure(spark, dir)
-      val sec = (System.nanoTime() - t0) / 1e9
+      Smoke.landDelta(delta, s"$dir/documents.parquet", s"$work/scratch")
+      val sec = smoke.ensure(operators.SuffixIndex, dir).sec
       val arm = Files.readString(
         operators.SuffixIndex.indexPathFor(dir).resolve("_last_arm")).trim
       val kern = operators.SuffixIndex.lastMergeKernelRows
@@ -82,26 +73,4 @@ object SuffixSkewSmoke {
     println(s"""{"levels":[${recs.mkString(",")}]}""")
     spark.stop()
   }
-
-  private def landDelta(df: DataFrame, target: String, scratch: String): Unit = {
-    df.write.mode("overwrite").parquet(scratch)
-    val tp = Paths.get(target)
-    val st = Files.list(Paths.get(scratch))
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, tp.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

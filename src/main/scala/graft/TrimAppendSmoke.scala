@@ -1,12 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicLong
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.operators.{Dedup, TrimIndex}
+import graft.pipeline.ParquetIO
 
 /** Measures the incremental arm of the materialized ExactSubstr removal
   * set ([[operators.TrimIndex]]) against the full build it replaces —
@@ -26,87 +23,31 @@ object TrimAppendSmoke {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = if (args.length > 1) args(1) else "/tmp/graft-trim-append-smoke"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val smoke = Smoke()
+    val spark = smoke.spark
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-
-    val bytesRead = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          bytesRead.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-    })
-    def measured[A](f: => A): (A, Double, Long) = {
-      Thread.sleep(2000)
-      val b0 = bytesRead.get(); val t0 = System.nanoTime()
-      val a = f
-      Thread.sleep(2000)
-      (a, (System.nanoTime() - t0) / 1e9 - 2.0, bytesRead.get() - b0)
-    }
 
     val base = Tables.load(spark, src, "documents").select($"doc_id", $"text")
     val dir = s"$work/corpus"
-    deleteRecursively(Paths.get(dir))
+    ParquetIO.deleteTree(Paths.get(dir))
     base.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    deleteRecursively(operators.TrimIndex.indexPathFor(dir))
 
-    val (_, buildSec, buildBytes) = measured(operators.TrimIndex.ensure(spark, dir))
-    val remT = operators.TrimIndex.tableDir(dir, "removed")
-    val vBefore = pipeline.ParquetIO.currentVersion(remT).get
-    val remBefore = pipeline.ParquetIO.read(spark, remT).count()
+    val build = smoke.build(TrimIndex, dir)
+    val remT = TrimIndex.tableDir(dir, "removed")
+    val vBefore = ParquetIO.currentVersion(remT).get
+    val remBefore = ParquetIO.read(spark, remT).count()
 
     // the re-crawl batch: every 10th doc re-ingested under a new id
-    landDelta(
+    Smoke.landDelta(
       base.filter($"doc_id" % 10 === 0)
-        .select(($"doc_id" + operators.Dedup.TwinOffset).as("doc_id"), $"text"),
+        .select(($"doc_id" + Dedup.TwinOffset).as("doc_id"), $"text"),
       s"$dir/documents.parquet", s"$work/scratch")
 
-    val (_, appendSec, appendBytes) = measured(operators.TrimIndex.ensure(spark, dir))
-
-    val vAfter = pipeline.ParquetIO.currentVersion(remT).get
-    val remAfter = pipeline.ParquetIO.read(spark, remT).count()
-    val vp = Paths.get(pipeline.ParquetIO.versionPath(remT, vAfter))
-    val st = Files.list(vp)
-    val hasPrev = try st.iterator().asScala.exists(_.getFileName.toString.startsWith(s"prev${vBefore}_"))
-      finally st.close()
-    val tookAppendArm = vAfter == vBefore + 1 && hasPrev && remAfter > remBefore
-    System.err.println(
-      f"[trim-append-smoke] build: $buildSec%.2f s / ${buildBytes / 1e6}%.1f MB read; " +
-        f"append: $appendSec%.2f s / ${appendBytes / 1e6}%.1f MB read; " +
-        s"appendArm=$tookAppendArm (removed $remBefore -> $remAfter, " +
-        s"version $vBefore -> $vAfter)")
-    println(s"""{"src":"$src","build_sec":${f"$buildSec%.2f"},""" +
-      s""""append_sec":${f"$appendSec%.2f"},"build_bytes":$buildBytes,""" +
-      s""""append_bytes":$appendBytes,"append_arm":$tookAppendArm}""")
+    val append = smoke.ensure(TrimIndex, dir)
+    val remAfter = ParquetIO.read(spark, remT).count()
+    smoke.report("trim-append-smoke", None, src, build, Seq(append),
+      Smoke.appendedVersion(remT, vBefore) && remAfter > remBefore,
+      s"removed $remBefore -> $remAfter, version $vBefore -> ${ParquetIO.currentVersion(remT).get}")
     spark.stop()
   }
-
-  private def landDelta(df: DataFrame, target: String, scratch: String): Unit = {
-    df.write.mode("overwrite").parquet(scratch)
-    val tp = Paths.get(target)
-    val st = Files.list(Paths.get(scratch))
-    try st.iterator().asScala.toSeq
-      .filter { p =>
-        val n = p.getFileName.toString
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach(p => Files.move(p, tp.resolve(s"delta-${p.getFileName}"),
-        StandardCopyOption.ATOMIC_MOVE))
-    finally st.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }

@@ -178,14 +178,9 @@ object ChangeFeed {
       .orderBy($"c_custkey", $"_change_type")
     // materialize (bounded: O(changed keys)) before the temp table goes
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    ParquetIO.deleteTree(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
-
-  private def rmTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.deleteIfExists(f))
 
   /** Apply a feed to a base replica — the CONSUMER half of the CDC
     * contract: `apply(A, diff(A,B), keys) == B` for any states A, B
@@ -393,7 +388,7 @@ object ChangeFeed {
     val out = between(s, tmp, 1L, 2L, Seq("c_custkey"))
       .orderBy($"c_custkey", $"_change_type")
     val rows = out.collect()
-    rmTree(java.nio.file.Paths.get(tmp).getParent)
+    ParquetIO.deleteTree(java.nio.file.Paths.get(tmp).getParent)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 

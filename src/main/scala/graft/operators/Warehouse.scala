@@ -1563,7 +1563,7 @@ object Warehouse {
         // F and B min-label fixpoints run in LOCKSTEP — one label table
         // carries both, so each round costs one checkpoint + one
         // convergence count instead of two of each (round count is
-        // max(dF, dB), not dF + dB; on a local[32] harness the
+        // max(dF, dB), not dF + dB; on a 32-slot local harness the
         // per-round job overhead dominates these tiny frames)
         var lab = active.select($"v", $"v".as("f"), $"v".as("b"))
           .localCheckpoint()

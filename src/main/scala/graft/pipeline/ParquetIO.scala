@@ -359,12 +359,20 @@ object ParquetIO {
     * directory is going away either way.
     */
   private def deleteRecursive(p: Path): Unit =
-    if (Files.exists(p))
-      try Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-      catch {
-        case _: java.io.UncheckedIOException | _: java.io.IOException => ()
-      }
+    try deleteTree(p)
+    catch {
+      case _: java.io.UncheckedIOException | _: java.io.IOException => ()
+    }
+
+  /** Deletes `p` and everything under it, children first; a missing
+    * `p` is a no-op. Closes its directory walk.
+    */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val st = Files.walk(p)
+      try st.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.deleteIfExists(f))
+      finally st.close()
+    }
 
   // ------------------------------------------------------------------
   // Optimistic multi-writer commits (CAS on the version namespace)

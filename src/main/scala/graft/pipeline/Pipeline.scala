@@ -1,8 +1,5 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,7 +48,7 @@ final class Pipeline(spark: SparkSession, workDir: String) {
     */
   private def writeIncremental(
       layer: String, table: String, key: Seq[String],
-      watermarkCol: String, batch: DataFrame,
+      watermarkCol: String,
       transform: Option[java.sql.Timestamp] => DataFrame,
       fullRefresh: Boolean = false): Unit = {
     if (fullRefresh || !exists(layer, table)) {
@@ -123,17 +120,14 @@ final class Pipeline(spark: SparkSession, workDir: String) {
 
     // ---- staging (incremental, watermark on RAW ingested_at) ----
     writeIncremental("staging", "stg_wiki_sp500", Seq("cik"), "ingested_at",
-      read("raw", "wiki_sp500"),
       hwm => Staging.stgWikiSp500(hwm.foldLeft(read("raw", "wiki_sp500"))(
         (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
     writeIncremental("staging", "stg_fortune500", Seq("company_name"), "ingested_at",
-      read("raw", "fortune_500"),
       hwm => Staging.stgFortune500(hwm.foldLeft(read("raw", "fortune_500"))(
         (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
 
     // ---- core (incremental on cik, cross-source watermark quirk) ----
     writeIncremental("core", "cr_company_complete", Seq("cik"), "last_updated",
-      read("staging", "stg_fortune500"),
       hwm => Core.crCompanyComplete(
         read("staging", "stg_fortune500"), read("staging", "stg_wiki_sp500"), hwm),
       fullRefresh)
@@ -152,7 +146,7 @@ final class Pipeline(spark: SparkSession, workDir: String) {
     overwriteSwap(Star.dimFortuneMetrics(read("snapshots", "fortune_metrics_snapshot")),
       "analytics", "dim_fortune_metrics")
     writeIncremental("analytics", "fact_company_performance", Seq("company_key"),
-      "last_updated", core,
+      "last_updated",
       hwm => Star.factCompanyPerformance(hwm.foldLeft(core)(
         (df, ts) => df.filter(col("last_updated") > lit(ts)))), fullRefresh)
 

@@ -2,8 +2,6 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the firmographic pipeline — the analog of one Airflow
   * DAG run (SURVEY.md §3.1): ingest a landing dir, run every layer, print
   * the test-stage results and a small run manifest (S9 parity: model
@@ -20,46 +18,33 @@ object RunPipeline {
     // remaining args joined: lets "2025-06-01 00:00:00" arrive unquoted
     val asOf = if (pos.length > 2) Timestamp.valueOf(pos.drop(2).mkString(" "))
       else new Timestamp(System.currentTimeMillis())
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-firmographics")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.get()
 
     val pipe = new Pipeline(spark, workDir)
     val results = pipe.run(landingDir, asOf, fullRefresh)
 
-    // model -> upstream lineage, mirroring the reference DAG's edges
-    // (DAG:199-201; dbt graph in dbt_project.yml:35-56)
-    val lineage: Map[(String, String), Seq[String]] = Map(
-      ("raw", "wiki_sp500") -> Seq("landing"),
-      ("raw", "fortune_500") -> Seq("landing"),
-      ("staging", "stg_wiki_sp500") -> Seq("raw.wiki_sp500"),
-      ("staging", "stg_fortune500") -> Seq("raw.fortune_500"),
-      ("core", "cr_company_complete") ->
-        Seq("staging.stg_fortune500", "staging.stg_wiki_sp500"),
-      ("snapshots", "company_location_snapshot") -> Seq("core.cr_company_complete"),
-      ("snapshots", "fortune_metrics_snapshot") -> Seq("core.cr_company_complete"),
-      ("analytics", "dim_company") -> Seq("core.cr_company_complete"),
-      ("analytics", "dim_location") -> Seq("snapshots.company_location_snapshot"),
-      ("analytics", "dim_fortune_metrics") -> Seq("snapshots.fortune_metrics_snapshot"),
-      ("analytics", "fact_company_performance") -> Seq("core.cr_company_complete"))
-    val tables = Seq(
-      ("raw", "wiki_sp500"), ("raw", "fortune_500"),
-      ("staging", "stg_wiki_sp500"), ("staging", "stg_fortune500"),
-      ("core", "cr_company_complete"),
-      ("snapshots", "company_location_snapshot"),
-      ("snapshots", "fortune_metrics_snapshot"),
-      ("analytics", "dim_company"), ("analytics", "dim_location"),
-      ("analytics", "dim_fortune_metrics"),
-      ("analytics", "fact_company_performance"))
+    // models in run order with their upstream lineage, mirroring the
+    // reference DAG's edges (DAG:199-201; dbt graph in
+    // dbt_project.yml:35-56); each table is counted once for stdout,
+    // the manifest and the docs
+    val dag = Seq(
+      ("raw", "wiki_sp500", Seq("landing")),
+      ("raw", "fortune_500", Seq("landing")),
+      ("staging", "stg_wiki_sp500", Seq("raw.wiki_sp500")),
+      ("staging", "stg_fortune500", Seq("raw.fortune_500")),
+      ("core", "cr_company_complete",
+        Seq("staging.stg_fortune500", "staging.stg_wiki_sp500")),
+      ("snapshots", "company_location_snapshot", Seq("core.cr_company_complete")),
+      ("snapshots", "fortune_metrics_snapshot", Seq("core.cr_company_complete")),
+      ("analytics", "dim_company", Seq("core.cr_company_complete")),
+      ("analytics", "dim_location", Seq("snapshots.company_location_snapshot")),
+      ("analytics", "dim_fortune_metrics", Seq("snapshots.fortune_metrics_snapshot")),
+      ("analytics", "fact_company_performance", Seq("core.cr_company_complete")))
     println(s"=== graft firmographics run @ $asOf ===")
-    tables.foreach { case (layer, t) =>
-      println(f"$layer%-10s $t%-30s ${pipe.read(layer, t).count()}%6d rows")
+    val models = dag.map { case (layer, t, deps) =>
+      val m = Docs.Model(layer, t, pipe.read(layer, t).count(), deps)
+      println(f"$layer%-10s $t%-30s ${m.rows}%6d rows")
+      m
     }
     val failed = results.filterNot(_.passed)
     println(s"tests: ${results.size - failed.size}/${results.size} passed")
@@ -70,16 +55,16 @@ object RunPipeline {
     // reference's manifest/run_results S3 upload, DAG:66-107)
     val invocationId = java.util.UUID.randomUUID().toString
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val models = tables.map { case (layer, t) =>
-      val deps = lineage.getOrElse((layer, t), Seq.empty).map(q).mkString("[", ",", "]")
-      s"""{"layer": ${q(layer)}, "table": ${q(t)}, "rows": ${pipe.read(layer, t).count()}, "depends_on": $deps}"""
+    val modelsJson = models.map { m =>
+      val deps = m.dependsOn.map(q).mkString("[", ",", "]")
+      s"""{"layer": ${q(m.layer)}, "table": ${q(m.table)}, "rows": ${m.rows}, "depends_on": $deps}"""
     }.mkString("[", ",", "]")
     val testsJson = results.map(r =>
       s"""{"table": ${q(r.table)}, "test": ${q(r.name)}, "violations": ${r.violations}}""")
       .mkString("[", ",", "]")
     val manifest =
       s"""{"invocation_id": ${q(invocationId)}, "as_of": ${q(asOf.toString)},
-         | "models": $models, "tests": $testsJson}""".stripMargin
+         | "models": $modelsJson, "tests": $testsJson}""".stripMargin
     val manifestDir = java.nio.file.Paths.get(workDir, "manifests")
     java.nio.file.Files.createDirectories(manifestDir)
     java.nio.file.Files.writeString(
@@ -88,15 +73,11 @@ object RunPipeline {
 
     // docs site (dbt docs generate analog): one self-contained HTML page
     // with the lineage DAG as inline SVG + model/test tables
-    val docModels = tables.map { case (layer, t) =>
-      Docs.Model(layer, t, pipe.read(layer, t).count(),
-        lineage.getOrElse((layer, t), Seq.empty))
-    }
     val docTests = results.map(r => Docs.TestRow(r.table, r.name, r.violations))
     val docsDir = java.nio.file.Paths.get(workDir, "docs")
     java.nio.file.Files.createDirectories(docsDir)
     java.nio.file.Files.writeString(docsDir.resolve("index.html"),
-      Docs.render(invocationId, asOf.toString, docModels, docTests))
+      Docs.render(invocationId, asOf.toString, models, docTests))
     println(s"docs: $docsDir/index.html")
 
     spark.stop()

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 
 import graft.GraftQuery
 import graft.functions.Fns.exactSum2
+import graft.pipeline.ParquetIO.deleteTree
 
 /** Structured Streaming surface (SURVEY.md §2.8). The reference is
   * batch-only; its incremental models are the "streaming-shaped" surface
@@ -403,8 +404,8 @@ object StreamingOps {
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
       try s.catalog.dropTempView(name) catch { case _: Throwable => () }
-      rmTree(ckptDir)
-      rmTree(srcDir)
+      deleteTree(ckptDir)
+      deleteTree(srcDir)
     }
   }
 
@@ -469,12 +470,6 @@ object StreamingOps {
       |WHERE s.session_seq < l.last_seq
       |   OR epoch_ms(s.session_end) + 1800000 < mx.max_ms - 7200000
       |ORDER BY s.user_id, s.session_seq""".stripMargin
-
-  private def rmTree(p: java.nio.file.Path): Unit = {
-    java.nio.file.Files.walk(p)
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-  }
 
   /** q63: the watermarked tumbling-window aggregation, ORACLE-CARRIED —
     * [[hourlyCounts]] run as a real continuous query (file source →
@@ -732,7 +727,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(tgtRoot)
     }
   }
 
@@ -784,7 +779,7 @@ object StreamingOps {
           java.nio.file.Files.move(dataFile, dst)
           java.nio.file.Files.setLastModifiedTime(dst,
             java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-          rmTree(stage)
+          deleteTree(stage)
       }
       ParquetIO.overwriteSwap(s1, tgtDir) // the replica starts at S1
       val q = s.readStream
@@ -809,7 +804,7 @@ object StreamingOps {
       val rows = out.collect() // O(dimension) — frees the temp replica
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(tgtRoot)
     }
   }
 
@@ -865,7 +860,7 @@ object StreamingOps {
         java.nio.file.Files.move(dataFile, dst)
         java.nio.file.Files.setLastModifiedTime(dst,
           java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L))
-        rmTree(stage)
+        deleteTree(stage)
       }
       var compactions = 0
       val q = s.readStream
@@ -896,7 +891,7 @@ object StreamingOps {
       val rows = out.collect()
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
-      rmTree(ckptDir); rmTree(srcDir); rmTree(tgtRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(tgtRoot)
     }
   }
 
@@ -971,7 +966,7 @@ object StreamingOps {
         moved = true
       }
     }
-    rmTree(tmp)
+    deleteTree(tmp)
   }
 
   // ---------------------------------------------------------------- q227
@@ -1059,7 +1054,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 
@@ -1198,7 +1193,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 
@@ -1361,7 +1356,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 
@@ -1455,11 +1450,11 @@ object StreamingOps {
       // testdata generations) before re-exercising the loop
       if (Files.exists(streamRoot)) {
         val st = Files.list(streamRoot)
-        try st.iterator().asScala.toSeq.foreach(rmTree)
+        try st.iterator().asScala.toSeq.foreach(deleteTree)
         finally st.close()
       }
       val stale = SuffixIndex.indexPathFor(staged.toString)
-      if (Files.exists(stale)) rmTree(stale)
+      if (Files.exists(stale)) deleteTree(stale)
       Files.createDirectories(staged)
       val pool = Dedup.suffixPoolDocs(graft.Tables.load(s, dir, "documents"))
         .persist()
@@ -1482,7 +1477,7 @@ object StreamingOps {
               incoming.resolve(s"$tag-${p.getFileName}"),
               StandardCopyOption.ATOMIC_MOVE))
           finally st.close()
-          rmTree(scratch)
+          deleteTree(scratch)
       }
       pool.unpersist(false)
       val ckpt = stageRoot.resolve("ckpt")
@@ -1505,7 +1500,7 @@ object StreamingOps {
                 docTable.resolve(s"delta$id-${p.getFileName}"),
                 StandardCopyOption.ATOMIC_MOVE))
             finally st.close()
-            rmTree(scratch)
+            deleteTree(scratch)
             SuffixIndex.ensure(s, staged.toString)
             ()
         }
@@ -1682,9 +1677,9 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir)
-      rmTree(srcDir)
-      rmTree(tgtRoot)
+      deleteTree(ckptDir)
+      deleteTree(srcDir)
+      deleteTree(tgtRoot)
     }
   }
 
@@ -1741,7 +1736,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        deleteTree(tmp)
       }
       stage(0); stage(1)
 
@@ -1814,7 +1809,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 
@@ -1863,7 +1858,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        deleteTree(tmp)
       }
       stage(0); stage(1)
 
@@ -1928,7 +1923,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 
@@ -2007,7 +2002,7 @@ object StreamingOps {
             moved = true
           }
         }
-        rmTree(tmp)
+        deleteTree(tmp)
       }
       stage(0, deltaIn); stage(1, shifted)
 
@@ -2052,7 +2047,7 @@ object StreamingOps {
       s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
     } finally {
       s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      rmTree(ckptDir); rmTree(srcDir); rmTree(outRoot)
+      deleteTree(ckptDir); deleteTree(srcDir); deleteTree(outRoot)
     }
   }
 }

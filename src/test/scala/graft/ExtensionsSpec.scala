@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -76,5 +79,21 @@ class ExtensionsSpec extends AnyFunSuite {
       SparkSession.clearActiveSession()
       SparkSession.setDefaultSession(SparkTestSession.spark)
     }
+  }
+
+  test("Sessions is the only session builder in src/main") {
+    // one config for every entry point: a second builder or a
+    // hard-coded master would let what runs drift from what is tested
+    val root = Paths.get("src/main/scala")
+    val st = Files.walk(root)
+    val sources = try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally st.close()
+    assert(sources.exists(_.getFileName.toString == "Sessions.scala"))
+    val offenders = sources.filter { p =>
+      val code = Files.readString(p)
+      p.getFileName.toString != "Sessions.scala" &&
+        (code.contains("SparkSession.builder()") || code.contains("local["))
+    }
+    assert(offenders.isEmpty, s"session built outside Sessions: ${offenders.mkString(", ")}")
   }
 }

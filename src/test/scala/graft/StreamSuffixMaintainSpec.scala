@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.SuffixIndex
+import graft.pipeline.ParquetIO
 import graft.streaming.StreamingOps
 
 /** q327's staged world lives in TWO independently lifecycled roots: the
@@ -19,13 +19,6 @@ import graft.streaming.StreamingOps
   */
 class StreamSuffixMaintainSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-
-  private def rmTree(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
-      finally st.close()
-    }
 
   test("torn stage (marker without index) re-exercises the loop; arm stays merge") {
     val dir = "/root/testdata/sf0.001"
@@ -43,7 +36,7 @@ class StreamSuffixMaintainSpec extends AnyFunSuite {
     val idx = SuffixIndex.indexPathFor(stage.resolve("corpus").toString)
     assert(Files.exists(stage.resolve("_complete")) && Files.exists(idx),
       "expected the run's own completed stage with a live index")
-    rmTree(idx)
+    ParquetIO.deleteTree(idx)
     spark.catalog.clearCache()
     val r2 = StreamingOps.q327StreamSuffixMaintain(spark, dir)
       .collect().map(_.toString).sorted
