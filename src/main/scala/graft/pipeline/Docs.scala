@@ -14,8 +14,8 @@ object Docs {
   case class Model(layer: String, table: String, rows: Long, dependsOn: Seq[String])
   case class TestRow(table: String, name: String, violations: Long)
 
-  private val LayerOrder =
-    Seq("landing", "raw", "staging", "core", "snapshots", "analytics")
+  /** Lineage columns: `landing`, then each layer in model run order. */
+  private val LayerOrder = "landing" +: Pipeline.models.map(_.layer).distinct
 
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")

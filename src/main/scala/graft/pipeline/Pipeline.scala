@@ -1,20 +1,22 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.sql.Timestamp
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Incremental, Scd2}
 
-/** End-to-end orchestrator reproducing the reference DAG's topology
-  * (SURVEY.md §3.1; DAG:199-201):
+/** End-to-end orchestrator reproducing the reference DAG (SURVEY.md §3.1;
+  * DAG:199-201):
   *
   *   extract/load (RAW) → staging → core → snapshots → star → test
   *
-  * with the reference's materialization strategies per layer
-  * (dbt_project.yml:35-56): incremental+unique_key upserts for staging/
-  * core/fact, full-refresh tables for dims, SCD2 snapshot state between
-  * core and star (which is what makes current-only dims possible), and
-  * tests once at the end.
+  * The topology is one ordered list, [[Pipeline.models]] — the analog of
+  * dbt's `ref()` graph. Run order, the test-stage tables, the manifest
+  * lineage and the docs site all come from it.
   *
   * Storage: Parquet per layer directory with atomic overwrite-swap
   * (write tmp → swap), making re-runs idempotent like MERGE. At
@@ -23,6 +25,7 @@ import graft.operators.{Incremental, Scd2}
   * helpers are signature-compatible (SURVEY.md §7.3).
   */
 final class Pipeline(spark: SparkSession, workDir: String) {
+  import Pipeline._
 
   private def path(layer: String, table: String): String =
     s"$workDir/$layer/$table"
@@ -37,48 +40,8 @@ final class Pipeline(spark: SparkSession, workDir: String) {
   def overwriteSwap(df: DataFrame, layer: String, table: String): Unit =
     ParquetIO.overwriteSwap(df, path(layer, table))
 
-  /** dbt incremental materialization: first run writes full; later runs
-    * watermark-filter on `ingested_at > max(watermarkCol)` (P3, strictly
-    * greater — dbt's is_incremental branch) then MERGE-upsert on the
-    * unique key (S6). Under `fullRefresh` the is_incremental() guard is
-    * false even when the target exists (dbt --full-refresh,
-    * reference: DBT/models/staging/stg_wiki_sp500.sql:5-7): the table is
-    * rebuilt from the complete upstream — the recovery path for schema
-    * changes and bad backfills.
-    */
-  private def writeIncremental(
-      layer: String, table: String, key: Seq[String],
-      watermarkCol: String,
-      transform: Option[java.sql.Timestamp] => DataFrame,
-      fullRefresh: Boolean = false): Unit = {
-    if (fullRefresh || !exists(layer, table)) {
-      overwriteSwap(transform(None), layer, table)
-    } else {
-      val existing = read(layer, table)
-      val hwm = existing.agg(max(col(watermarkCol))).first().get(0)
-      val hwmTs = hwm match {
-        case t: java.sql.Timestamp => Some(t)
-        case l: java.time.LocalDateTime => Some(java.sql.Timestamp.valueOf(l))
-        case i: java.time.Instant => Some(java.sql.Timestamp.from(i))
-        case _ => None
-      }
-      val incoming = transform(hwmTs)
-      overwriteSwap(Incremental.upsert(existing, incoming, key), layer, table)
-    }
-  }
-
-  /** SCD2 snapshot materialization (S8/§2.9). */
-  private def writeSnapshot(
-      table: String, batch: DataFrame, key: String, asOf: Column): Unit = {
-    if (!exists("snapshots", table))
-      overwriteSwap(Scd2.firstRun(batch, Seq(key), "last_updated"), "snapshots", table)
-    else
-      overwriteSwap(
-        Scd2.snapshot(read("snapshots", table), batch, Seq(key), "last_updated", asOf),
-        "snapshots", table)
-  }
-
-  /** One full pipeline run over a landing directory of JSON files.
+  /** One full pipeline run over a landing directory of JSON files: every
+    * model in list order, then the test stage over every non-RAW model.
     *
     * @param at logical run timestamp (ingested_at for this batch and the
     *           snapshot hard-delete invalidation time) — injectable so
@@ -89,78 +52,125 @@ final class Pipeline(spark: SparkSession, workDir: String) {
     *           drop snapshots either.
     * @return test results of the final `dbt test` stage.
     */
-  def run(landingDir: String, at: java.sql.Timestamp,
+  def run(landingDir: String, at: Timestamp,
       fullRefresh: Boolean = false): Seq[Checks.CheckResult] = {
-    // ---- extract/load: landing JSON → RAW (S4/S5, DAG:111-136) ----
-    // RAW is append-only: later batches APPEND new parquet files next to
-    // the existing ones (job-committed, so readers never see a partial
-    // batch) instead of rewriting the accumulated history — O(batch) per
-    // ingest run, not O(history). Only the scalar max(id) reads the
-    // existing table (S5's persisted identity).
-    def loadRaw(table: String, glob: String, source: String): Unit = {
-      if (!exists("raw", table)) {
-        overwriteSwap(RawIngest.ingest(spark, landingDir, glob, source, lit(at), 1L),
-          "raw", table)
-      } else {
-        val existing = read("raw", table)
-        val startId =
-          existing.agg(coalesce(max(col("id")), lit(0L))).first().getLong(0) + 1L
-        // COPY INTO load history: files already in RAW are not re-loaded
-        val history =
-          if (existing.columns.contains("source_file"))
-            Some(existing.select(col("source_file")))
-          else None
-        ParquetIO.appendInPlace(
-          RawIngest.ingest(spark, landingDir, glob, source, lit(at), startId, history),
-          path("raw", table))
+    // a model is complete before any later model reads it, so each
+    // upstream is read once per run and shared by all its readers
+    val upstream = mutable.Map.empty[String, DataFrame]
+    def inputs(m: Model): Seq[DataFrame] = m.deps.map(d =>
+      upstream.getOrElseUpdate(d, ParquetIO.read(spark, s"$workDir/${d.replace('.', '/')}")))
+
+    models.foreach { m =>
+      val target = path(m.layer, m.name)
+      val firstBuild = !ParquetIO.exists(target)
+      m.materialization match {
+        // RAW is append-only: a later batch is APPENDED next to the
+        // existing files (job-committed, so readers never see a partial
+        // batch); only the scalar max(id) and the COPY load history read
+        // the existing table (S4/S5, DAG:111-136)
+        case RawAppend(glob, source) =>
+          val existing = if (firstBuild) None else Some(ParquetIO.read(spark, target))
+          val startId = existing.fold(1L)(
+            _.agg(coalesce(max(col("id")), lit(0L))).first().getLong(0) + 1L)
+          val batch = RawIngest.ingest(spark, landingDir, glob, source, lit(at), startId, existing)
+          if (firstBuild) ParquetIO.overwriteSwap(batch, target)
+          else ParquetIO.appendInPlace(batch, target)
+        // dbt incremental: a first (or --full-refresh) run writes the
+        // whole upstream; later runs build from what lies past the
+        // target's high-water mark and MERGE-upsert on the key (P3, S6;
+        // reference: DBT/models/staging/stg_wiki_sp500.sql:5-7)
+        case IncrementalUpsert(key, watermark, build) =>
+          if (fullRefresh || firstBuild) {
+            ParquetIO.overwriteSwap(build(inputs(m), None), target)
+          } else {
+            val existing = ParquetIO.read(spark, target)
+            val hwm = Option(existing.agg(max(col(watermark))).first().getTimestamp(0))
+            ParquetIO.overwriteSwap(
+              Incremental.upsert(existing, build(inputs(m), hwm), key), target)
+          }
+        // SCD2 snapshot, timestamp strategy on last_updated (S8/§2.9)
+        case Scd2Snapshot(key, build) =>
+          val batch = build(inputs(m))
+          ParquetIO.overwriteSwap(
+            if (firstBuild) Scd2.firstRun(batch, Seq(key), "last_updated")
+            else Scd2.snapshot(ParquetIO.read(spark, target), batch, Seq(key),
+              "last_updated", lit(at)),
+            target)
+        case Table(build) =>
+          ParquetIO.overwriteSwap(build(inputs(m)), target)
       }
     }
-    loadRaw("fortune_500", "*fortune500*.json", "fortune500")
-    loadRaw("wiki_sp500", "*sp500.json", "wikipedia_sp500")
-
-    // ---- staging (incremental, watermark on RAW ingested_at) ----
-    writeIncremental("staging", "stg_wiki_sp500", Seq("cik"), "ingested_at",
-      hwm => Staging.stgWikiSp500(hwm.foldLeft(read("raw", "wiki_sp500"))(
-        (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
-    writeIncremental("staging", "stg_fortune500", Seq("company_name"), "ingested_at",
-      hwm => Staging.stgFortune500(hwm.foldLeft(read("raw", "fortune_500"))(
-        (df, ts) => df.filter(col("ingested_at") > lit(ts)))), fullRefresh)
-
-    // ---- core (incremental on cik, cross-source watermark quirk) ----
-    writeIncremental("core", "cr_company_complete", Seq("cik"), "last_updated",
-      hwm => Core.crCompanyComplete(
-        read("staging", "stg_fortune500"), read("staging", "stg_wiki_sp500"), hwm),
-      fullRefresh)
-
-    // ---- snapshots (between core and star, DAG:201) ----
-    val core = read("core", "cr_company_complete")
-    writeSnapshot("company_location_snapshot",
-      Star.locationSnapshotBatch(core), "location_key", lit(at))
-    writeSnapshot("fortune_metrics_snapshot",
-      Star.fortuneMetricsSnapshotBatch(core), "fortune_metrics_key", lit(at))
-
-    // ---- star: dims full-refresh, fact incremental (dbt_project.yml:50-56) ----
-    overwriteSwap(Star.dimCompany(core), "analytics", "dim_company")
-    overwriteSwap(Star.dimLocation(read("snapshots", "company_location_snapshot")),
-      "analytics", "dim_location")
-    overwriteSwap(Star.dimFortuneMetrics(read("snapshots", "fortune_metrics_snapshot")),
-      "analytics", "dim_fortune_metrics")
-    writeIncremental("analytics", "fact_company_performance", Seq("company_key"),
-      "last_updated",
-      hwm => Star.factCompanyPerformance(hwm.foldLeft(core)(
-        (df, ts) => df.filter(col("last_updated") > lit(ts)))), fullRefresh)
 
     // ---- test stage, once at the end (DAG:177-180, ordering DAG:201) ----
-    val tables = Map(
-      "stg_wiki_sp500" -> read("staging", "stg_wiki_sp500"),
-      "stg_fortune500" -> read("staging", "stg_fortune500"),
-      "cr_company_complete" -> read("core", "cr_company_complete"),
-      "company_location_snapshot" -> read("snapshots", "company_location_snapshot"),
-      "fortune_metrics_snapshot" -> read("snapshots", "fortune_metrics_snapshot"),
-      "dim_company" -> read("analytics", "dim_company"),
-      "dim_location" -> read("analytics", "dim_location"),
-      "dim_fortune_metrics" -> read("analytics", "dim_fortune_metrics"),
-      "fact_company_performance" -> read("analytics", "fact_company_performance"))
+    val tables = models.collect {
+      case m if !m.materialization.isInstanceOf[RawAppend] => m.name -> read(m.layer, m.name)
+    }.toMap
     Checks.run(tables, Checks.referenceSuite(tables))
   }
+}
+
+object Pipeline {
+
+  /** How a model is written — the reference's per-layer strategies
+    * (dbt_project.yml:35-56). Each `build` receives its model's
+    * upstreams in `deps` order.
+    */
+  sealed trait Materialization
+
+  /** RAW append of the landing files matching `glob` (COPY INTO). */
+  final case class RawAppend(glob: String, source: String) extends Materialization
+
+  /** Incremental upsert on `key`; `build` gets the target's
+    * max(`watermark`) once the target exists (None on a full build).
+    */
+  final case class IncrementalUpsert(key: Seq[String], watermark: String,
+      build: (Seq[DataFrame], Option[Timestamp]) => DataFrame) extends Materialization
+
+  /** SCD2 snapshot keyed by `key`, fed the batch `build` returns. */
+  final case class Scd2Snapshot(key: String, build: Seq[DataFrame] => DataFrame)
+      extends Materialization
+
+  /** Full-refresh table, rebuilt every run. */
+  final case class Table(build: Seq[DataFrame] => DataFrame) extends Materialization
+
+  /** One model: `deps` are `landing` or the `layer.name` of an earlier model. */
+  final case class Model(layer: String, name: String, deps: Seq[String],
+      materialization: Materialization)
+
+  /** Rows strictly past the high-water mark (dbt's is_incremental branch). */
+  private def since(df: DataFrame, column: String, hwm: Option[Timestamp]): DataFrame =
+    hwm.foldLeft(df)((d, ts) => d.filter(col(column) > lit(ts)))
+
+  /** The reference DAG in run order (DAG:199-201): RAW, staging, core,
+    * snapshots (between core and star), then the star schema — dims
+    * full-refresh, the fact incremental.
+    */
+  val models: Seq[Model] = Seq(
+    Model("raw", "wiki_sp500", Seq("landing"), RawAppend("*sp500.json", "wikipedia_sp500")),
+    Model("raw", "fortune_500", Seq("landing"), RawAppend("*fortune500*.json", "fortune500")),
+    Model("staging", "stg_wiki_sp500", Seq("raw.wiki_sp500"),
+      IncrementalUpsert(Seq("cik"), "ingested_at",
+        (in, hwm) => Staging.stgWikiSp500(since(in.head, "ingested_at", hwm)))),
+    Model("staging", "stg_fortune500", Seq("raw.fortune_500"),
+      IncrementalUpsert(Seq("company_name"), "ingested_at",
+        (in, hwm) => Staging.stgFortune500(since(in.head, "ingested_at", hwm)))),
+    // the HWM goes to the model itself: it filters the wiki side only,
+    // the reference's cross-source watermark quirk (SURVEY.md §7.4 #3)
+    Model("core", "cr_company_complete",
+      Seq("staging.stg_fortune500", "staging.stg_wiki_sp500"),
+      IncrementalUpsert(Seq("cik"), "last_updated",
+        (in, hwm) => Core.crCompanyComplete(in(0), in(1), hwm))),
+    Model("snapshots", "company_location_snapshot", Seq("core.cr_company_complete"),
+      Scd2Snapshot("location_key", in => Star.locationSnapshotBatch(in.head))),
+    Model("snapshots", "fortune_metrics_snapshot", Seq("core.cr_company_complete"),
+      Scd2Snapshot("fortune_metrics_key", in => Star.fortuneMetricsSnapshotBatch(in.head))),
+    Model("analytics", "dim_company", Seq("core.cr_company_complete"),
+      Table(in => Star.dimCompany(in.head))),
+    Model("analytics", "dim_location", Seq("snapshots.company_location_snapshot"),
+      Table(in => Star.dimLocation(in.head))),
+    Model("analytics", "dim_fortune_metrics", Seq("snapshots.fortune_metrics_snapshot"),
+      Table(in => Star.dimFortuneMetrics(in.head))),
+    Model("analytics", "fact_company_performance", Seq("core.cr_company_complete"),
+      IncrementalUpsert(Seq("company_key"), "last_updated",
+        (in, hwm) => Star.factCompanyPerformance(since(in.head, "last_updated", hwm)))))
 }

@@ -24,8 +24,8 @@ object RawIngest {
     * @param at   ingestion timestamp (CURRENT_TIMESTAMP() at COPY time,
     *             DAG:116 — injectable for deterministic replays/tests)
     * @param startId first id to assign (pass existing max+1)
-    * @param alreadyLoaded COPY INTO load-history parity: a one-column
-    *             (`source_file`) frame of previously ingested file paths;
+    * @param alreadyLoaded COPY INTO load-history parity: a frame whose
+    *             `source_file` column holds previously ingested file paths;
     *             those files are skipped, so re-running a DAG over an
     *             unchanged landing area is a no-op exactly like
     *             Snowflake's COPY (which consults its load history and
@@ -37,9 +37,9 @@ object RawIngest {
       landingDir: String,
       glob: String,
       source: String,
-      at: Column = current_timestamp(),
-      startId: Long = 1L,
-      alreadyLoaded: Option[DataFrame] = None): DataFrame = {
+      at: Column,
+      startId: Long,
+      alreadyLoaded: Option[DataFrame]): DataFrame = {
     val files = spark.read
       .option("wholetext", "true")
       .option("pathGlobFilter", glob)

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 /** CLI entry for the firmographic pipeline — the analog of one Airflow
@@ -23,28 +24,13 @@ object RunPipeline {
     val pipe = new Pipeline(spark, workDir)
     val results = pipe.run(landingDir, asOf, fullRefresh)
 
-    // models in run order with their upstream lineage, mirroring the
-    // reference DAG's edges (DAG:199-201; dbt graph in
-    // dbt_project.yml:35-56); each table is counted once for stdout,
-    // the manifest and the docs
-    val dag = Seq(
-      ("raw", "wiki_sp500", Seq("landing")),
-      ("raw", "fortune_500", Seq("landing")),
-      ("staging", "stg_wiki_sp500", Seq("raw.wiki_sp500")),
-      ("staging", "stg_fortune500", Seq("raw.fortune_500")),
-      ("core", "cr_company_complete",
-        Seq("staging.stg_fortune500", "staging.stg_wiki_sp500")),
-      ("snapshots", "company_location_snapshot", Seq("core.cr_company_complete")),
-      ("snapshots", "fortune_metrics_snapshot", Seq("core.cr_company_complete")),
-      ("analytics", "dim_company", Seq("core.cr_company_complete")),
-      ("analytics", "dim_location", Seq("snapshots.company_location_snapshot")),
-      ("analytics", "dim_fortune_metrics", Seq("snapshots.fortune_metrics_snapshot")),
-      ("analytics", "fact_company_performance", Seq("core.cr_company_complete")))
+    // models in run order with their upstream lineage (Pipeline.models);
+    // each table is counted once for stdout, the manifest and the docs
     println(s"=== graft firmographics run @ $asOf ===")
-    val models = dag.map { case (layer, t, deps) =>
-      val m = Docs.Model(layer, t, pipe.read(layer, t).count(), deps)
-      println(f"$layer%-10s $t%-30s ${m.rows}%6d rows")
-      m
+    val models = Pipeline.models.map { m =>
+      val rows = pipe.read(m.layer, m.name).count()
+      println(f"${m.layer}%-10s ${m.name}%-30s $rows%6d rows")
+      Docs.Model(m.layer, m.name, rows, m.deps)
     }
     val failed = results.filterNot(_.passed)
     println(s"tests: ${results.size - failed.size}/${results.size} passed")
@@ -65,20 +51,19 @@ object RunPipeline {
     val manifest =
       s"""{"invocation_id": ${q(invocationId)}, "as_of": ${q(asOf.toString)},
          | "models": $modelsJson, "tests": $testsJson}""".stripMargin
-    val manifestDir = java.nio.file.Paths.get(workDir, "manifests")
-    java.nio.file.Files.createDirectories(manifestDir)
-    java.nio.file.Files.writeString(
-      manifestDir.resolve(s"run_$invocationId.json"), manifest)
-    println(s"manifest: $manifestDir/run_$invocationId.json")
+    def artifact(kind: String, dir: String, file: String, text: String): Unit = {
+      val d = Paths.get(workDir, dir)
+      Files.createDirectories(d)
+      Files.writeString(d.resolve(file), text)
+      println(s"$kind: $d/$file")
+    }
+    artifact("manifest", "manifests", s"run_$invocationId.json", manifest)
 
     // docs site (dbt docs generate analog): one self-contained HTML page
     // with the lineage DAG as inline SVG + model/test tables
     val docTests = results.map(r => Docs.TestRow(r.table, r.name, r.violations))
-    val docsDir = java.nio.file.Paths.get(workDir, "docs")
-    java.nio.file.Files.createDirectories(docsDir)
-    java.nio.file.Files.writeString(docsDir.resolve("index.html"),
+    artifact("docs", "docs", "index.html",
       Docs.render(invocationId, asOf.toString, models, docTests))
-    println(s"docs: $docsDir/index.html")
 
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

@@ -96,4 +96,18 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, s"session built outside Sessions: ${offenders.mkString(", ")}")
   }
+
+  test("the pipeline topology is written only in Pipeline.models") {
+    // RunPipeline and Docs iterate the model list; a table name spelled
+    // out in either (literal or comment) would be a second, unchecked
+    // copy of the DAG
+    val tables = graft.pipeline.Pipeline.models.map(_.name)
+    assert(tables.size == 11)
+    val offenders = for {
+      f <- Seq("RunPipeline.scala", "Docs.scala")
+      code = Files.readString(Paths.get("src/main/scala/graft/pipeline", f))
+      t <- tables if code.contains(t)
+    } yield s"$f names $t"
+    assert(offenders.isEmpty, offenders.mkString(", "))
+  }
 }

@@ -229,6 +229,20 @@ class PipelineSpec extends AnyFunSuite {
       s"failed: ${results.filterNot(_.passed)}")
   }
 
+  test("model list: unique names, deps run first, every tested table is a model") {
+    val models = Pipeline.models
+    val names = models.map(_.name)
+    assert(names.distinct == names, "model names must be unique")
+    // list order is run order: each dep is the landing area or an
+    // earlier model, so no model reads a table this run has not built
+    models.zipWithIndex.foreach { case (m, i) =>
+      val earlier = models.take(i).map(e => s"${e.layer}.${e.name}").toSet
+      m.deps.foreach(d => assert(d == "landing" || earlier(d), s"${m.name} reads $d too early"))
+    }
+    val checks = pipeline.Checks.referenceSuite(names.map(_ -> spark.emptyDataFrame).toMap)
+    assert(checks.map(_.table).toSet.subsetOf(names.toSet))
+  }
+
   test("acceptedValues passes NULLs (dbt compiled not-in semantics)") {
     import spark.implicits._
     val df = Seq(Some("A"), Some("X"), None).toDF("c")
